@@ -1,33 +1,7 @@
-"""Concordance index (C-index) as a distributed aggregation.
+"""Concordance (C-index), ≡ reference ``EvalSurv.concordance_td()`` (models/base.py:80).
 
-≡ reference scoring: ``EvalSurv(...).concordance_td()`` (reference
-src/elastic_surv/models/base.py:80, delegated to pycox). Two forms:
-
-- ``harrell_cindex``: risk-score concordance (Harrell). A pair (i, j) is
-  comparable iff T_i < T_j and E_i = 1; concordant iff risk_i > risk_j;
-  risk ties count 0.5. This is the oracle-checkable exact form.
-- ``concordance_td``: Antolini time-dependent variant over a survival matrix
-  — risk of i at time T_i is 1 - S_i(T_i); used by ``models.base.score``.
-
-Scale: the *pairwise* implementation is a self-join on the comparability
-predicate — Spark executes it as a broadcast-nested-loop, O(n²) pairs:
-correct and fastest at small evaluation sizes, a scale-killer above ~10⁴
-rows. The default is therefore size-gated (``mode="auto"``): below
-``exact_threshold`` rows the pairwise join runs; above it the *bucketed*
-algorithm runs — still EXACT (bit-identical counts), but O(n·B) work and
-linear shuffles, built from three disjoint pair classes:
-
-1. same time-bucket        → per-bucket local sweep (applyInPandas)
-2. diff time, same risk-bucket → per-risk-bucket local sweep with a
-   time-bucket histogram (applyInPandas)
-3. diff time, diff risk-bucket → bucket-level dominance from a tiny
-   (time×risk) count grid (numpy on the driver)
-
-Equal times / equal risks always land in the same bucket (bucket = count
-of boundaries ≤ value), so every strict comparison across buckets is
-decided by the bucket pair alone — no approximation anywhere; the
-approxQuantile boundaries only affect balance, never counts. Pair
-*sampling* (``sample_frac``) remains as the estimator for quick sweeps.
+Small n (≤ ``EXACT_THRESHOLD`` rows): the O(n²) self-join, Harrell and Antolini.
+Large n and per group: exact grouped kernels; a global form runs one on a constant key.
 """
 
 from __future__ import annotations
@@ -36,6 +10,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+EXACT_THRESHOLD = 20_000
+_KEY = "_one"  # the constant group key of the global forms
+
+
+def _exceeds_threshold(df: DataFrame) -> bool:
+    """The one size gate of the global entry points: a bounded probe —
+    ``limit(EXACT_THRESHOLD + 1)`` answers "bigger than the threshold?"
+    without a full scan of the evaluation frame."""
+    return df.limit(EXACT_THRESHOLD + 1).count() > EXACT_THRESHOLD
 
 
 def _pairwise_counts(df: DataFrame) -> DataFrame:
@@ -111,72 +95,14 @@ def _local_cross_time(pdf: pd.DataFrame, n_time_buckets: int) -> pd.DataFrame:
     )
 
 
-def _bucketed_frames(
-    df: DataFrame,
-    time_col: str,
-    event_col: str,
-    risk_col: str,
-    n_buckets: int = 64,
-    cache_input: bool = True,
-) -> tuple[DataFrame, DataFrame, int]:
-    """The two Spark plans of the bucketed algorithm (exposed for plan-shape
-    tests): (grid_counts, local_parts_agg, n_time_buckets). Neither contains
-    a row-level join of any kind — only hash aggregates and grouped-map
-    sweeps over linear shuffles.
-
-    ``cache_input`` (default): the projected base lazily localCheckpoints
-    BEFORE the quantile pass, so the quantile action materializes it once
-    and the grid + both grouped-map sweeps read the checkpoint instead of
-    each re-running the source plan (4 source evaluations → 1 — the r13
-    scan sweep caught the re-reads once a registry row exposed them).
-    Callers whose input is ALREADY persisted (the per-cut td
-    decompositions) pass False — a checkpoint per cut would pin |cuts|
-    corpus-sized copies."""
-    base = df.select(
-        F.col(time_col).cast("double").alias("t"),
-        F.col(event_col).cast("int").alias("e"),
-        F.col(risk_col).cast("double").alias("r"),
-    ).where(F.col("t").isNotNull() & F.col("r").isNotNull())
-    if cache_input:
-        base = base.localCheckpoint(eager=False)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    tb_bounds, rb_bounds = (
-        base.stat.approxQuantile(["t", "r"], probs, 0.001) if probs else ([], [])
-    )
-    tb_bounds = sorted(set(tb_bounds))
-    rb_bounds = sorted(set(rb_bounds))
-    n_tb = len(tb_bounds) + 1
-    tagged = base.select(
-        "t", "e", "r",
-        _bucket(F.col("t"), tb_bounds).alias("tb"),
-        _bucket(F.col("r"), rb_bounds).alias("rb"),
-    )
-    grid = tagged.groupBy("tb", "rb").agg(
-        F.count("*").alias("n"), F.sum("e").alias("ne")
-    )
-    schema = "n_comparable long, n_concordant long, n_tied long"
-    part1 = tagged.groupBy("tb").applyInPandas(
-        lambda pdf: _local_harrell(pdf), schema=schema
-    )
-    part2 = tagged.groupBy("rb").applyInPandas(
-        lambda pdf: _local_cross_time(pdf, n_tb), schema=schema
-    )
-    local = part1.unionByName(part2).agg(
-        F.sum("n_comparable").alias("c1"),
-        F.sum("n_concordant").alias("c2"),
-        F.sum("n_tied").alias("c3"),
-    )
-    return grid, local, n_tb
-
-
 def _grid_dominance(G: np.ndarray, GE: np.ndarray) -> tuple[int, int]:
     """Cross-bucket (class 2+3) counts from the (time-bucket × risk-bucket)
     occupancy grid: ``comparable`` = events × rows in strictly later time
     buckets (any risk bucket), ``concordant`` = events × rows in strictly
     later time AND strictly lower risk buckets (a lower risk BUCKET implies
     a strictly lower risk VALUE — the bucket map is monotone — so no tie
-    can cross buckets). ONE kernel shared by the single-population and the
-    grouped bucketed paths (the _masked_harrell_sweep discipline)."""
+    can cross buckets). Run once per group by
+    :func:`harrell_cindex_by_bucketed`."""
     n_tb = G.shape[0]
     rows_per_tb = G.sum(axis=1)
     events_per_tb = GE.sum(axis=1)
@@ -190,179 +116,33 @@ def _grid_dominance(G: np.ndarray, GE: np.ndarray) -> tuple[int, int]:
     return comparable3, conc3
 
 
-def harrell_cindex_counts_bucketed(
-    df: DataFrame,
-    time_col: str,
-    event_col: str,
-    risk_col: str,
-    n_buckets: int = 64,
-    cache_input: bool = True,
-) -> DataFrame:
-    """Exact Harrell counts with linear shuffles (see module doc). Returns
-    the same one-row frame as the pairwise form, computed without any
-    nested-loop join — the 100 TB evaluation path. ``cache_input`` per
-    :func:`_bucketed_frames` (False when the caller already persisted)."""
-    spark = df.sparkSession
-    grid_df, local_df, n_tb = _bucketed_frames(
-        df, time_col, event_col, risk_col, n_buckets, cache_input=cache_input
-    )
-    # class 3: bucket-grid dominance (tiny collect: ≤ n_buckets² rows)
-    grid = grid_df.collect()
-    n_rb = max((row["rb"] for row in grid), default=0) + 1
-    G = np.zeros((n_tb, n_rb), dtype=np.int64)
-    GE = np.zeros((n_tb, n_rb), dtype=np.int64)
-    for row in grid:
-        G[row["tb"], row["rb"]] = row["n"]
-        GE[row["tb"], row["rb"]] = row["ne"]
-    comparable3, conc3 = _grid_dominance(G, GE)
+def _carry(fn):
+    """Wrap a one-group counts kernel so its output row carries the
+    group key ``_g`` (the first column of every grouped-map schema)."""
 
-    local = local_df.first()
-    comparable = int(local["c1"] or 0) + comparable3
-    concordant = int(local["c2"] or 0) + conc3
-    tied = int(local["c3"] or 0)
-    c_index = (
-        round((concordant + 0.5 * tied) / comparable, 6) if comparable else None
-    )
-    return spark.createDataFrame(
-        [(comparable, concordant, tied, c_index)],
-        schema="n_comparable long, n_concordant long, n_tied long, c_index double",
-    )
-
-
-def harrell_cindex_counts(
-    df: DataFrame,
-    time_col: str,
-    event_col: str,
-    risk_col: str,
-    sample_frac: float | None = None,
-    seed: int = 42,
-    mode: str = "auto",
-    exact_threshold: int = 20_000,
-    cache_input: bool = True,
-) -> DataFrame:
-    """One row: (n_comparable, n_concordant, n_tied, c_index rounded 6).
-
-    ``mode``: "pairwise" (O(n²) join), "bucketed" (exact, linear shuffles),
-    or "auto" — pairwise below ``exact_threshold`` rows, bucketed above.
-    Both modes produce identical counts; auto only picks the cheaper plan.
-    Rows with NULL time or risk are excluded up front in EVERY mode (the
-    standard missing-risk convention), so the mode switch never changes the
-    answer on data with nulls. ``cache_input`` reaches the bucketed
-    kernel's checkpoint (:func:`_bucketed_frames`); pass False when the
-    input is already persisted.
-    """
-    df = df.where(F.col(time_col).isNotNull() & F.col(risk_col).isNotNull())
-    if sample_frac is not None:
-        df = df.sample(fraction=sample_frac, seed=seed)
-    if mode == "auto":
-        # bounded probe: limit(threshold+1) answers "bigger than threshold?"
-        # without a full scan of the evaluation frame
-        small = df.limit(exact_threshold + 1).count() <= exact_threshold
-        mode = "pairwise" if small else "bucketed"
-    if mode == "bucketed":
-        return harrell_cindex_counts_bucketed(
-            df, time_col, event_col, risk_col, cache_input=cache_input
-        )
-    base = df.select(
-        F.col(time_col).alias("t"), F.col(event_col).alias("e"), F.col(risk_col).alias("r")
-    )
-    return _pairwise_counts(base).select(
-        "n_comparable",
-        "n_concordant",
-        "n_tied",
-        F.round(
-            (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"), 6
-        ).alias("c_index"),
-    )
-
-
-def _largest_cohort_exceeds(
-    valid: DataFrame, group_col: str, threshold: int
-) -> bool:
-    """Bounded auto-mode probe for the grouped metrics: does any cohort
-    of ``valid`` exceed ``threshold`` rows? The ungrouped auto gates
-    bound their probe with ``limit(threshold + 1).count()``; the grouped
-    ones paid a FULL ``groupBy().count()`` pass over the entire input
-    even when the frame was tiny (ADVICE r12 #3). Probe in two stages:
-    the same bounded limit-count first — a frame of ≤ ``threshold`` TOTAL
-    rows cannot contain a larger cohort, so only genuinely large inputs
-    (where one aggregate pass is noise next to the kernel that follows)
-    pay the grouped count."""
-    if valid.limit(threshold + 1).count() <= threshold:
-        return False
-    biggest = (
-        valid.groupBy(group_col).count().agg(F.max("count")).first()[0]
-    )
-    return biggest is not None and biggest > threshold
-
-
-def harrell_cindex_by(
-    df: DataFrame,
-    group_col: str,
-    time_col: str,
-    event_col: str,
-    risk_col: str,
-    round_to: int | None = 6,
-    mode: str = "grouped_map",
-    exact_threshold: int = 200_000,
-) -> DataFrame:
-    """Per-group EXACT Harrell C in one grouped-map job: ``(group,
-    n_comparable, n_concordant, n_tied, c_index)`` — the discrimination
-    leg of the segmented-model metric family (per-cohort KM / td-AUC /
-    Brier / now C).
-
-    Each group's counts come from the same O(m log m) Fenwick time-sweep
-    the bucketed single-population path uses for its class-1 buckets
-    (``_local_harrell`` — exact, tie-correct), run as ONE ``applyInPandas``
-    task per group: a single shuffle on the group key, then embarrassingly
-    parallel sweeps. Scale contract: one GROUP fits one task (the
-    segmented-population shape — many bounded segments); a single giant
-    group belongs to the ungrouped size-gated ``harrell_cindex_counts``.
-    ``c_index`` is NULL for groups with no comparable pair. Rows with
-    NULL time or risk are excluded up front — the same EVERY-mode
-    convention as ``harrell_cindex_counts`` (they would otherwise enter
-    the sweep as NaN and count as latest-time comparables).
-
-    ``mode`` (r12, the ungrouped auto-switch mirrored): "grouped_map"
-    (default — the registry rows' certified plan shape), "bucketed"
-    (:func:`harrell_cindex_by_bucketed`, identical counts, no
-    whole-cohort task), or "auto" — probe the LARGEST cohort with one
-    grouped count and route to the bucketed kernel when it exceeds
-    ``exact_threshold`` rows. Both kernels are exact, so the switch is a
-    plan choice, never a semantics change.
-    """
-    if mode not in ("grouped_map", "bucketed", "auto"):
-        raise ValueError(f"harrell_cindex_by: unknown mode {mode!r}")
-    if mode == "auto":
-        valid = df.where(
-            F.col(time_col).isNotNull() & F.col(risk_col).isNotNull()
-        )
-        mode = (
-            "bucketed"
-            if _largest_cohort_exceeds(valid, group_col, exact_threshold)
-            else "grouped_map"
-        )
-    if mode == "bucketed":
-        return harrell_cindex_by_bucketed(
-            df, group_col, time_col, event_col, risk_col, round_to=round_to
-        )
-    gtype = df.schema[group_col].dataType.simpleString()
-    base = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(time_col).cast("double").alias("t"),
-        F.col(event_col).cast("int").alias("e"),
-        F.col(risk_col).cast("double").alias("r"),
-    ).where(F.col("t").isNotNull() & F.col("r").isNotNull())
-
-    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _local_harrell(pdf)
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = fn(pdf)
         out.insert(0, "_g", pdf["_g"].iloc[0])
         return out
 
-    counts = base.groupBy("_g").applyInPandas(
-        sweep,
-        schema=f"_g {gtype}, n_comparable long, n_concordant long, n_tied long",
+    return run
+
+
+def _sum_counts(parts: DataFrame) -> DataFrame:
+    """Per-group sums of partial (n_comparable, n_concordant, n_tied)."""
+    return parts.groupBy("_g").agg(
+        F.sum("n_comparable").alias("n_comparable"),
+        F.sum("n_concordant").alias("n_concordant"),
+        F.sum("n_tied").alias("n_tied"),
     )
+
+
+def _cindex_frame(
+    counts: DataFrame, group_col: str, round_to: int | None
+) -> DataFrame:
+    """``(group, n_comparable, n_concordant, n_tied, c_index)`` from
+    per-group counts keyed ``_g``; ``c_index`` is NULL for groups with no
+    comparable pair."""
     c = F.when(
         F.col("n_comparable") > 0,
         (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"),
@@ -378,6 +158,75 @@ def harrell_cindex_by(
     )
 
 
+def harrell_cindex_counts(
+    df: DataFrame, time_col: str, event_col: str, risk_col: str
+) -> DataFrame:
+    """One row: (n_comparable, n_concordant, n_tied, c_index rounded 6).
+
+    A pair (i, j) is comparable iff T_i < T_j and E_i = 1; concordant iff
+    risk_i > risk_j; risk ties count 0.5. Up to ``EXACT_THRESHOLD`` rows
+    the pairwise self-join runs; above it the exact grouped bucketed
+    kernel runs on a constant key. Both produce identical counts. Rows
+    with NULL time or risk are excluded up front on both routes (the
+    standard missing-risk convention).
+    """
+    df = df.where(F.col(time_col).isNotNull() & F.col(risk_col).isNotNull())
+    if _exceeds_threshold(df):
+        return harrell_cindex_by_bucketed(
+            df.withColumn(_KEY, F.lit(0)), _KEY, time_col, event_col, risk_col
+        ).drop(_KEY)
+    base = df.select(
+        F.col(time_col).alias("t"), F.col(event_col).alias("e"), F.col(risk_col).alias("r")
+    )
+    return _pairwise_counts(base).select(
+        "n_comparable",
+        "n_concordant",
+        "n_tied",
+        F.round(
+            (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"), 6
+        ).alias("c_index"),
+    )
+
+
+def harrell_cindex_by(
+    df: DataFrame,
+    group_col: str,
+    time_col: str,
+    event_col: str,
+    risk_col: str,
+    round_to: int | None = 6,
+) -> DataFrame:
+    """Per-group EXACT Harrell C in one grouped-map job: ``(group,
+    n_comparable, n_concordant, n_tied, c_index)`` — the discrimination
+    leg of the segmented-model metric family (per-cohort KM / td-AUC /
+    Brier / now C).
+
+    Each group's counts come from the same O(m log m) Fenwick time-sweep
+    the bucketed kernel uses for its class-1 buckets (``_local_harrell`` —
+    exact, tie-correct), run as ONE ``applyInPandas`` task per group: a
+    single shuffle on the group key, then embarrassingly parallel sweeps.
+    Scale contract: one GROUP fits one task (the segmented-population
+    shape — many bounded segments); a cohort too big for one task belongs
+    to :func:`harrell_cindex_by_bucketed` (identical counts). ``c_index``
+    is NULL for groups with no comparable pair. Rows with NULL time or
+    risk are excluded up front — the convention of
+    ``harrell_cindex_counts`` (they would otherwise enter the sweep as NaN
+    and count as latest-time comparables).
+    """
+    gtype = df.schema[group_col].dataType.simpleString()
+    base = df.select(
+        F.col(group_col).alias("_g"),
+        F.col(time_col).cast("double").alias("t"),
+        F.col(event_col).cast("int").alias("e"),
+        F.col(risk_col).cast("double").alias("r"),
+    ).where(F.col("t").isNotNull() & F.col("r").isNotNull())
+    counts = base.groupBy("_g").applyInPandas(
+        _carry(_local_harrell),
+        schema=f"_g {gtype}, n_comparable long, n_concordant long, n_tied long",
+    )
+    return _cindex_frame(counts, group_col, round_to)
+
+
 def harrell_cindex_by_bucketed(
     df: DataFrame,
     group_col: str,
@@ -388,8 +237,8 @@ def harrell_cindex_by_bucketed(
     round_to: int | None = 6,
     cache_input: bool = True,
 ) -> DataFrame:
-    """Per-group EXACT Harrell C for cohorts too big for one task — the
-    bucketed decomposition of ``harrell_cindex_counts_bucketed`` grouped:
+    """Per-group EXACT Harrell C for cohorts too big for one task (and,
+    on a constant key, the large-n route of ``harrell_cindex_counts``):
     ``(group, n_comparable, n_concordant, n_tied, c_index)``, identical
     counts to ``harrell_cindex_by`` (asserted in tests), but NO grouped-map
     task ever holds a whole cohort:
@@ -407,9 +256,14 @@ def harrell_cindex_by_bucketed(
     (``harrell_cindex_by``) to "one group's 1/n_buckets BUCKET SLICE fits
     one task" — raise ``n_buckets`` for bigger cohorts. Bucket boundaries
     are GLOBAL approx-quantiles (one pass); the decomposition is exact for
-    ANY boundaries, so per-group skew affects balance, never counts.
-    Rows with NULL time or risk are excluded up front (the EVERY-mode
-    convention); ``c_index`` is NULL for groups with no comparable pair.
+    ANY boundaries, so per-group skew affects balance, never counts:
+    bucket id = #boundaries ≤ value, so equal values share a bucket and
+    every strict comparison across buckets is decided by the bucket pair.
+    Rows with NULL time or risk are excluded up front; ``c_index`` is NULL
+    for groups with no comparable pair. ``cache_input`` (default): the
+    projected base localCheckpoints before the quantile pass, so the
+    source is evaluated once; pass False when the input is already
+    persisted.
     """
     gtype = df.schema[group_col].dataType.simpleString()
     base = df.select(
@@ -441,14 +295,6 @@ def harrell_cindex_by_bucketed(
         f"_g {gtype}, n_comparable long, n_concordant long, n_tied long"
     )
 
-    def _carry(fn):
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = fn(pdf)
-            out.insert(0, "_g", pdf["_g"].iloc[0])
-            return out
-
-        return run
-
     part1 = tagged.groupBy("_g", "tb").applyInPandas(
         _carry(_local_harrell), schema=schema
     )
@@ -467,44 +313,18 @@ def harrell_cindex_by_bucketed(
         GE[pdf["tb"], pdf["rb"]] = pdf["ne"]
         comparable3, conc3 = _grid_dominance(G, GE)
         return pd.DataFrame(
-            {
-                "_g": [pdf["_g"].iloc[0]],
-                "n_comparable": [comparable3],
-                "n_concordant": [conc3],
-                "n_tied": [0],
-            }
+            {"n_comparable": [comparable3], "n_concordant": [conc3], "n_tied": [0]}
         )
 
-    part3 = grid.groupBy("_g").applyInPandas(grid_part, schema=schema)
-    counts = (
-        part1.unionByName(part2)
-        .unionByName(part3)
-        .groupBy("_g")
-        .agg(
-            F.sum("n_comparable").alias("n_comparable"),
-            F.sum("n_concordant").alias("n_concordant"),
-            F.sum("n_tied").alias("n_tied"),
-        )
-    )
-    c = F.when(
-        F.col("n_comparable") > 0,
-        (F.col("n_concordant") + 0.5 * F.col("n_tied")) / F.col("n_comparable"),
-    )
-    if round_to is not None:
-        c = F.round(c, round_to)
-    return counts.select(
-        F.col("_g").alias(group_col),
-        "n_comparable",
-        "n_concordant",
-        "n_tied",
-        c.alias("c_index"),
-    )
+    part3 = grid.groupBy("_g").applyInPandas(_carry(grid_part), schema=schema)
+    counts = _sum_counts(part1.unionByName(part2).unionByName(part3))
+    return _cindex_frame(counts, group_col, round_to)
 
 
 def harrell_cindex(
-    df: DataFrame, time_col: str, event_col: str, risk_col: str, **kw
+    df: DataFrame, time_col: str, event_col: str, risk_col: str
 ) -> float:
-    row = harrell_cindex_counts(df, time_col, event_col, risk_col, **kw).first()
+    row = harrell_cindex_counts(df, time_col, event_col, risk_col).first()
     if row is None or row["c_index"] is None:
         return float("nan")  # no comparable pairs
     return float(row["c_index"])
@@ -516,72 +336,23 @@ def concordance_td_exact(
     event_col: str,
     surv_col: str,
     cuts: list[float],
-    mode: str = "auto",
 ) -> tuple[int, int, int, float | None]:
-    """EXACT Antolini time-dependent concordance at ANY population size —
-    the scale path the ``concordance_td`` docstring promised: with curves
-    defined over ``cuts``, every comparison made by an event subject whose
-    time maps to cut index g reads the scalar column ``surv[g]``, so the
-    pairwise problem decomposes into one Harrell count PER OCCUPIED CUT
-    (index events restricted to that cut, risk = −surv[g]) and each count
-    runs on the bucketed exact kernel (``harrell_cindex_counts`` — linear
-    shuffles, no nested-loop join). Returns ``(n_comparable,
-    n_concordant, n_tied, c_index)`` with ``c_index`` None when no pair is
-    comparable.
-
-    Work: one pass per cut index that actually holds an event — at most
-    ``|cuts| + 1`` corpus passes (the +1 is the before-first-cut index,
-    where S ≡ 1 and every pair ties), each O(n) shuffle. The input
-    persists across the passes and releases in ``finally``. Bit-identical
-    to the pairwise form (asserted in tests); the sampling estimator in
-    ``concordance_td`` remains the quick-sweep default because model
-    scoring is tolerance-based anyway.
-    """
-    cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
-    base = pred.select(
-        F.col(time_col).cast("double").alias("t"),
-        F.col(event_col).cast("int").alias("e"),
-        F.col(surv_col).alias("s"),
-        (
-            F.size(
-                F.filter(cuts_lit, lambda c: c <= F.col(time_col).cast("double"))
-            )
-            - 1
-        ).alias("_gidx"),
-    ).persist()
-    try:
-        occupied = [
-            int(r["_gidx"])
-            for r in base.filter(F.col("e") == 1)
-            .select("_gidx")
-            .distinct()
-            .collect()  # bounded: <= |cuts| + 1 rows
-        ]
-        comparable = concordant = tied = 0
-        for g in sorted(occupied):
-            sub = base.select(
-                "t",
-                ((F.col("e") == 1) & (F.col("_gidx") == g))
-                .cast("int")
-                .alias("_eg"),
-                (
-                    -F.element_at("s", g + 1)
-                    if g >= 0
-                    else F.lit(1.0)  # before the first cut S ≡ 1: all tied
-                ).alias("_r"),
-            )
-            row = harrell_cindex_counts(
-                sub, "t", "_eg", "_r", mode=mode, cache_input=False
-            ).first()  # base is persisted above: no per-cut checkpoint
-            comparable += int(row["n_comparable"] or 0)
-            concordant += int(row["n_concordant"] or 0)
-            tied += int(row["n_tied"] or 0)
-        cidx = (
-            round((concordant + 0.5 * tied) / comparable, 6) if comparable else None
+    """EXACT Antolini time-dependent concordance at ANY population size:
+    :func:`concordance_td_exact_by` on a constant key. Returns
+    ``(n_comparable, n_concordant, n_tied, c_index)``; ``c_index`` is
+    rounded to 6 places from the integer counts, None when no pair is
+    comparable (also on empty and event-free input)."""
+    row = (
+        concordance_td_exact_by(
+            pred.withColumn(_KEY, F.lit(0)), _KEY, time_col, event_col, surv_col,
+            cuts, round_to=None,
         )
-        return comparable, concordant, tied, cidx
-    finally:
-        base.unpersist()
+        .select("n_comparable", "n_concordant", "n_tied")
+        .first()
+    )
+    comparable, concordant, tied = (int(v) for v in row) if row else (0, 0, 0)
+    cidx = round((concordant + 0.5 * tied) / comparable, 6) if comparable else None
+    return comparable, concordant, tied, cidx
 
 
 def concordance_td_by(
@@ -592,8 +363,6 @@ def concordance_td_by(
     surv_col: str,
     cuts: list[float],
     round_to: int | None = 6,
-    mode: str = "grouped_map",
-    exact_threshold: int = 200_000,
 ) -> DataFrame:
     """Per-group EXACT Antolini time-dependent C-index over a
     survival-curve column: ``(group, n_comparable, n_concordant, n_tied,
@@ -611,29 +380,9 @@ def concordance_td_by(
     all pairs exactly once: O(|cuts| · m log m) per group instead of
     O(m²). Same grouped-map scale contract as ``harrell_cindex_by`` (one
     GROUP fits one task; group count is the parallelism); ``c_index`` is
-    NULL for groups with no comparable pair.
-
-    ``mode`` (r12): "grouped_map" (default — the registry rows' certified
-    plan shape), "exact_by" (:func:`concordance_td_exact_by`, identical
-    counts, no whole-cohort task), or "auto" — probe the largest cohort
-    and route to the decomposed kernel above ``exact_threshold`` rows.
+    NULL for groups with no comparable pair; a cohort too big for one
+    task belongs to :func:`concordance_td_exact_by` (identical counts).
     """
-    if mode not in ("grouped_map", "exact_by", "auto"):
-        raise ValueError(f"concordance_td_by: unknown mode {mode!r}")
-    if mode == "auto":
-        valid = df.where(
-            F.col(time_col).isNotNull() & F.col(surv_col).isNotNull()
-        )
-        mode = (
-            "exact_by"
-            if _largest_cohort_exceeds(valid, group_col, exact_threshold)
-            else "grouped_map"
-        )
-    if mode == "exact_by":
-        return concordance_td_exact_by(
-            df, group_col, time_col, event_col, surv_col, cuts,
-            round_to=round_to,
-        )
     gtype = df.schema[group_col].dataType.simpleString()
     cuts_arr = np.asarray([float(c) for c in cuts], dtype=float)
     base = df.select(
@@ -642,7 +391,7 @@ def concordance_td_by(
         F.col(event_col).cast("int").alias("e"),
         F.col(surv_col).alias("s"),
     ).where(
-        # the EVERY-mode missing-value convention: a NULL curve would make
+        # the missing-value convention: a NULL curve would make
         # np.asarray raise on the ragged input and fail the whole task; a
         # NULL t would corrupt the sort/cut index as NaN
         F.col("t").isNotNull() & F.col("s").isNotNull()
@@ -709,20 +458,25 @@ def concordance_td_exact_by(
     n_buckets: int = 64,
     round_to: int | None = 6,
 ) -> DataFrame:
-    """Per-group EXACT Antolini td-concordance at ANY cohort size — the
-    per-cut decomposition of :func:`concordance_td_exact` composed with
-    the grouped bucketed kernel (:func:`harrell_cindex_by_bucketed`), so
-    unlike :func:`concordance_td_by` (one grouped-map sweep per cohort)
-    NO task ever holds a whole cohort: each of the ≤ |cuts|+1 occupied
-    cut indices contributes one grouped bucketed pass whose tasks are
+    """Per-group EXACT Antolini td-concordance at ANY cohort size (and,
+    on a constant key, :func:`concordance_td_exact`). With curves defined
+    over ``cuts``, every comparison made by an event subject whose time
+    maps to cut index g reads the scalar column ``surv[g]``, so the
+    problem decomposes into one Harrell count PER OCCUPIED CUT (index
+    events restricted to that cut, risk = −surv[g]), each run on the
+    grouped bucketed kernel (:func:`harrell_cindex_by_bucketed`). Unlike
+    :func:`concordance_td_by` (one grouped-map sweep per cohort) NO task
+    ever holds a whole cohort: each of the ≤ |cuts|+1 occupied cut
+    indices (the +1 is the before-first-cut index, where S ≡ 1 and every
+    pair ties) contributes one linear-shuffle pass whose tasks are
     (group, bucket) slices and per-group grids. Returns ``(group,
     n_comparable, n_concordant, n_tied, c_index)`` — integer-identical to
     ``concordance_td_by`` (asserted in tests); ``c_index`` NULL for
     groups with no comparable pair.
 
-    Same EVERY-mode NULL convention as ``concordance_td_by``: rows with a
-    NULL time or NULL curve are dropped up front. The input persists
-    across the cut passes and releases in ``finally``.
+    Same NULL convention as ``concordance_td_by``: rows with a NULL time
+    or NULL curve are dropped up front. The input persists across the cut
+    passes and releases in ``finally``.
     """
     cuts_lit = F.array(*[F.lit(float(c)) for c in cuts])
     base = df.select(
@@ -784,25 +538,7 @@ def concordance_td_exact_by(
         acc = parts[0]
         for p in parts[1:]:
             acc = acc.unionByName(p)
-        counts = acc.groupBy("_g").agg(
-            F.sum("n_comparable").alias("n_comparable"),
-            F.sum("n_concordant").alias("n_concordant"),
-            F.sum("n_tied").alias("n_tied"),
-        )
-        c = F.when(
-            F.col("n_comparable") > 0,
-            (F.col("n_concordant") + 0.5 * F.col("n_tied"))
-            / F.col("n_comparable"),
-        )
-        if round_to is not None:
-            c = F.round(c, round_to)
-        out = counts.select(
-            F.col("_g").alias(group_col),
-            "n_comparable",
-            "n_concordant",
-            "n_tied",
-            c.alias("c_index"),
-        )
+        out = _cindex_frame(_sum_counts(acc), group_col, round_to)
         # materialize before releasing the persisted base — but keep the
         # return DISTRIBUTED like every sibling metric: an eager
         # localCheckpoint cuts the lineage off `base` without pulling the
@@ -868,9 +604,6 @@ def concordance_td(
     event_col: str,
     surv_col: str,
     cuts: list[float],
-    exact_threshold: int = 20_000,
-    seed: int = 42,
-    mode: str = "auto",
 ) -> float:
     """Antolini time-dependent C-index over a survival-curve column.
 
@@ -878,34 +611,13 @@ def concordance_td(
     Pair (i, j) comparable iff T_i < T_j and E_i = 1; concordant iff
     S_i(T_i) < S_j(T_i) (higher risk at the event time of i), ties 0.5.
 
-    ``mode`` mirrors the Harrell auto-switch (VERDICT r11 stretch #8) —
-    population-scale Antolini is now EXACT by default, not sampled:
-
-    - ``"auto"`` (default): ≤ ``exact_threshold`` rows → the pairwise
-      self-join below (O(n²) pair work, fine at gate size); above it →
-      :func:`concordance_td_exact`, the per-cut decomposition over the
-      bucketed Harrell kernel (≤ |cuts|+1 linear-shuffle passes, no
-      nested-loop join). Both are exact, so the gate is a plan choice,
-      not a semantics change.
-    - ``"pairwise"`` / ``"exact"``: force one kernel.
-    - ``"sample"``: the pre-r12 estimator — uniformly sample to
-      ~``exact_threshold`` rows first; kept for quick sweeps where an
-      unbiased estimate beats the extra passes.
-
-    The curve lookup S(t) = surv[max {k : cuts[k] <= t}] is a JVM-side
-    higher-order expression; the pairwise part is a self-join like
-    Harrell's.
+    Up to ``EXACT_THRESHOLD`` rows the pairwise self-join below runs (the
+    curve lookup S(t) = surv[max {k : cuts[k] <= t}] is a JVM-side
+    higher-order expression); above it :func:`concordance_td_exact`, the
+    per-cut decomposition over the bucketed Harrell kernel. Both are
+    exact, so the gate is a plan choice, not a semantics change.
     """
-    if mode not in ("auto", "pairwise", "exact", "sample"):
-        raise ValueError(f"concordance_td: unknown mode {mode!r}")
-    if mode in ("auto", "sample"):
-        n = pred.count()
-        if n > exact_threshold:
-            if mode == "auto":
-                mode = "exact"
-            else:
-                pred = pred.sample(fraction=exact_threshold / n, seed=seed)
-    if mode == "exact":
+    if _exceeds_threshold(pred):
         _, _, _, cidx = concordance_td_exact(
             pred, time_col, event_col, surv_col, cuts
         )

@@ -10,10 +10,10 @@ C-index (src/elastic_surv/models/base.py:80); AUC(t) resolves WHERE on
 the horizon a model discriminates.
 
 Scale posture — no pairwise join anywhere: risk scores quantize to
-``n_bins`` fixed-width bins (the bin edges come from ONE 1-row min/max
-aggregate that broadcasts; same posture as the metric family's ≤64-point
-curves), so each horizon reduces to a ``(horizon, bin)`` count grid and
-the case-control pair count is a cumulative window over ≤ ``n_bins`` rows
+``n_bins`` fixed-width bins (the bin edges come from one per-group
+min/max aggregate; the global form is the grouped kernel on a constant
+key), so each horizon reduces to a ``(horizon, bin)`` count grid and the
+case-control pair count is a cumulative window over ≤ ``n_bins`` rows
 per horizon. Work is O(n·horizons) map-side + a bounded aggregate —
 never O(n²). Counts stay integer until the final division, making the
 result bit-portable across engines (the SQL oracle reproduces it
@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_KEY = "_one"  # the constant group key of the global form
 
 __all__ = [
     "cumulative_dynamic_auc",
@@ -44,111 +46,18 @@ def cumulative_dynamic_auc(
     round_to: int | None = 6,
 ) -> DataFrame:
     """(t, n_cases, n_controls, auc) at ``n_times`` equispaced interior
-    horizons between min and max observed time.
+    horizons between min and max observed time:
+    :func:`cumulative_dynamic_auc_by` on a constant key.
 
     Higher risk must mean earlier events: AUC ≫ 0.5 ⇔ the score
     discriminates. Horizons with no cases or no controls are dropped
     (AUC undefined there). Rows with NULL time or risk are excluded up
-    front (the library-wide convention, harrell_cindex_counts): F.least
-    skips NULLs, so an unfiltered NULL risk would silently land in the
-    TOP bin and count as a maximal-risk subject.
+    front (the library-wide convention, harrell_cindex_counts).
     """
-    df = df.where(F.col(time_col).isNotNull() & F.col(risk_col).isNotNull())
-    bounds = df.agg(
-        F.min(time_col).alias("_tmin"),
-        F.max(time_col).alias("_tmax"),
-        F.min(risk_col).cast("double").alias("_rmin"),
-        F.max(risk_col).cast("double").alias("_rmax"),
-    )
-    step = n_times + 1
-    grid = bounds.select(
-        "_rmin",
-        "_rmax",
-        F.explode(F.sequence(F.lit(1), F.lit(n_times))).alias("_i"),
-        "_tmin",
-        "_tmax",
-    ).select(
-        "_rmin",
-        "_rmax",
-        (
-            F.col("_tmin")
-            + F.floor(
-                F.col("_i")
-                * (F.col("_tmax") - F.col("_tmin")).cast("double")
-                / F.lit(float(step))
-            )
-        ).alias("_gt"),
-    ).distinct()
-    # ^ the floor coarsens horizons to the time column's granularity, so when
-    # tmax - tmin < n_times + 1 several grid rows collide on one _gt; without
-    # the distinct each subject would be classified once PER duplicate row and
-    # the groupBy would inflate n_cases/n_controls by the collision factor
-    # (auc itself cancels it — the counts wouldn't). _rmin/_rmax are constant,
-    # so the row-level distinct dedups exactly on _gt. DELIBERATE tradeoff:
-    # integer horizon offsets are exactly representable, which is what lets
-    # the DuckDB oracle reproduce the grid bit-for-bit; the cost is that a
-    # sub-unit time span (tmax - tmin < 1) degenerates to the single
-    # horizon t = tmin — rescale such times before calling (the IPCW
-    # variant uses exact float horizons and does not coarsen).
-    # map-side classify + bin: subjects × n_times rows, integer statuses
-    r_span = F.col("_rmax") - F.col("_rmin")
-    bin_col = F.when(r_span <= 0, F.lit(0)).otherwise(
-        F.least(
-            F.lit(n_bins - 1),
-            F.floor(
-                (F.col(risk_col).cast("double") - F.col("_rmin"))
-                / r_span
-                * F.lit(n_bins)
-            ),
-        )
-    )
-    cls = (
-        df.select(time_col, event_col, risk_col)
-        .crossJoin(F.broadcast(grid))
-        .select(
-            F.col("_gt"),
-            bin_col.cast("int").alias("_bin"),
-            (
-                (F.col(time_col) <= F.col("_gt"))
-                & (F.col(event_col).cast("int") == 1)
-            ).cast("long").alias("_case"),
-            (F.col(time_col) > F.col("_gt")).cast("long").alias("_control"),
-        )
-        .filter((F.col("_case") == 1) | (F.col("_control") == 1))
-    )
-    counts = cls.groupBy("_gt", "_bin").agg(
-        F.sum("_case").alias("n_cases"),
-        F.sum("_control").alias("n_controls"),
-    )
-    # bounded window: ≤ n_bins rows per horizon
-    w = (
-        Window.partitionBy("_gt")
-        .orderBy(F.asc("_bin"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scored = counts.withColumn(
-        "_ctrl_below", F.coalesce(F.sum("n_controls").over(w), F.lit(0))
-    )
-    out = (
-        scored.groupBy("_gt")
-        .agg(
-            F.sum("n_cases").cast("long").alias("n_cases"),
-            F.sum("n_controls").cast("long").alias("n_controls"),
-            F.sum(
-                F.lit(2) * F.col("n_cases") * F.col("_ctrl_below")
-                + F.col("n_cases") * F.col("n_controls")
-            ).alias("_num"),
-        )
-        .filter((F.col("n_cases") > 0) & (F.col("n_controls") > 0))
-        .withColumn(
-            "auc",
-            F.col("_num").cast("double")
-            / (F.lit(2.0) * F.col("n_cases") * F.col("n_controls")),
-        )
-    )
-    if round_to is not None:
-        out = out.withColumn("auc", F.round("auc", round_to))
-    return out.select(F.col("_gt").alias("t"), "n_cases", "n_controls", "auc")
+    return cumulative_dynamic_auc_by(
+        df.withColumn(_KEY, F.lit(0)), _KEY, time_col, event_col, risk_col,
+        n_times=n_times, n_bins=n_bins, round_to=round_to,
+    ).drop(_KEY)
 
 
 def cumulative_dynamic_auc_by(
@@ -168,16 +77,17 @@ def cumulative_dynamic_auc_by(
     ``fit_per_group``: train one model per segment, read one AUC curve per
     segment).
 
-    Same pairwise-join-free shape as :func:`cumulative_dynamic_auc`, with
-    the group threaded through every key: per-group bounds come from one
+    No pairwise join, with the group threaded through every key
+    (:func:`cumulative_dynamic_auc` runs it on a constant key): per-group
+    bounds come from one
     hash-aggregate (grid = groups × n_times rows, broadcast back), the
     classification is map-side after a broadcast equi-join on the group,
     counts reduce on (group, horizon, bin), and the cumulative window is
     bounded at ≤ ``n_bins`` rows per (group, horizon). Work is
     O(n·horizons) + one bounded aggregate regardless of group count —
     never a per-group driver loop. Risk bins are per-group (each group's
-    own min/max), so AUC values match running the ungrouped operator on
-    each group's slice exactly. NULL time/risk rows are excluded up front
+    own min/max), so AUC values match running the global form on each
+    group's slice exactly. NULL time/risk rows are excluded up front
     (the F.least NULL-skip would bin them as maximal risk); NULL groups
     drop at the grid equi-join.
     """
@@ -210,7 +120,17 @@ def cumulative_dynamic_auc_by(
             )
         ).alias("_gt"),
     ).distinct()
-    # ^ same collision dedup as the ungrouped form (short per-group spans)
+    # ^ the floor coarsens horizons to the time column's granularity, so when
+    # tmax - tmin < n_times + 1 several grid rows collide on one _gt; without
+    # the distinct each subject would be classified once PER duplicate row and
+    # the groupBy would inflate n_cases/n_controls by the collision factor
+    # (auc itself cancels it — the counts wouldn't). _rmin/_rmax are constant
+    # per group, so the row-level distinct dedups exactly on (group, _gt).
+    # DELIBERATE tradeoff: integer horizon offsets are exactly representable,
+    # which is what lets the DuckDB oracle reproduce the grid bit-for-bit;
+    # the cost is that a sub-unit time span (tmax - tmin < 1) degenerates to
+    # the single horizon t = tmin — rescale such times before calling (the
+    # IPCW variant uses exact float horizons and does not coarsen).
     r_span = F.col("_rmax") - F.col("_rmin")
     bin_col = F.when(r_span <= 0, F.lit(0)).otherwise(
         F.least(

@@ -127,4 +127,6 @@ class DeepHitModel(SurvModel):
         zm = z - z.max(axis=1, keepdims=True)
         ez = np.exp(zm)
         p = ez / ez.sum(axis=1, keepdims=True)
-        return 1.0 - np.cumsum(p, axis=1)
+        # the pmf sums to 1 only up to rounding, so the last point of
+        # 1 - cumsum can land a few ulps below 0: clamp onto [0, 1]
+        return np.maximum(1.0 - np.cumsum(p, axis=1), 0.0)

@@ -938,10 +938,10 @@ def _user_lifetimes(spark: SparkSession, sf_dir: str, as_seconds: bool = False) 
 def harrell_cindex_lifetimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harrell C-index (SURVEY §2.4 A6) on a deterministic risk score.
 
-    risk = -activity_count; size-gated auto mode — pairwise join at this
-    eval size, and above 20k rows the EXACT bucketed linear-shuffle
-    algorithm (metrics/concordance.py:harrell_cindex_counts_bucketed) with
-    identical counts, so the oracle holds in either regime.
+    risk = -activity_count; size-gated — pairwise join at this eval size,
+    and above 20k rows the EXACT bucketed linear-shuffle kernel
+    (metrics/concordance.py:harrell_cindex_by_bucketed on a constant key)
+    with identical counts, so the oracle holds in either regime.
     """
     surv = _user_lifetimes(spark, sf_dir)
     counts = harrell_cindex_counts(surv, "t", "e", "risk")
@@ -8738,7 +8738,7 @@ _RECERT_FIRST = {
     # r13 under its UNCHANGED oracle (integer-identical values,
     # value-verified at all three SFs in-round back then); window slot
     # claimed now. harrell_cindex_lifetimes (plan changed by the same
-    # r13 _bucketed_frames cache) carries NO entry on purpose: it is
+    # r13 bucketed-kernel cache) carries NO entry on purpose: it is
     # r11-green, so it sits inside the 47-row r11-stale block of the r14
     # window BY CONSTRUCTION — an entry would only reorder the same 50.
     "harrell_cindex_cohorts": 13,  # r13 flip to the bucketed kernel

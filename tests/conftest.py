@@ -14,6 +14,6 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     from elastic_surv_spark.session import get_spark
 
-    spark = get_spark("elastic-surv-spark-tests", cpus=8)
+    spark = get_spark("elastic-surv-spark-tests")
     yield spark
     spark.stop()

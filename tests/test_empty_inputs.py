@@ -21,10 +21,37 @@ def _empty(spark, schema):
     return spark.createDataFrame([], schema)
 
 
-def test_empty_survival_metrics(spark):
+def test_empty_survival_metrics(spark, monkeypatch):
+    from elastic_surv_spark.metrics import concordance
+    from elastic_surv_spark.metrics.td_auc import cumulative_dynamic_auc
+
     df = _empty(spark, "t double, e int, risk double")
     assert km_curve(df, "t", "e").count() == 0
     assert math.isnan(harrell_cindex(df, "t", "e", "risk"))
+    assert cumulative_dynamic_auc(df, "t", "e", "risk").count() == 0
+
+    # the global forms answer one zero-count row with a NULL c_index on
+    # empty and event-free input, on both sides of the size gate (a
+    # constant-key grouped kernel alone would return zero rows)
+    no_events = spark.createDataFrame(
+        [(float(i), 0, float(i)) for i in range(5)], "t double, e int, risk double"
+    )
+    for threshold in (concordance.EXACT_THRESHOLD, 0):
+        monkeypatch.setattr(concordance, "EXACT_THRESHOLD", threshold)
+        for frame in (df, no_events):
+            rows = concordance.harrell_cindex_counts(frame, "t", "e", "risk").collect()
+            assert len(rows) == 1, threshold
+            assert rows[0]["n_comparable"] == 0 and rows[0]["c_index"] is None
+
+    cuts = [1.0, 2.0]
+    curves = _empty(spark, "t double, e int, surv array<double>")
+    curves_no_events = spark.createDataFrame(
+        [(1.0, 0, [0.9, 0.5]), (3.0, 0, [0.8, 0.4])],
+        "t double, e int, surv array<double>",
+    )
+    for frame in (curves, curves_no_events):
+        got = concordance.concordance_td_exact(frame, "t", "e", "surv", cuts)
+        assert got == (0, 0, 0, None)
 
 
 def test_empty_dedup_and_cluster(spark):

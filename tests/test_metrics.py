@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from elastic_surv_spark.metrics import concordance
 from elastic_surv_spark.metrics.brier import (
     brier_curve,
     integrated_brier_score,
@@ -19,7 +20,6 @@ from elastic_surv_spark.metrics.concordance import (
     concordance_td,
     harrell_cindex,
     harrell_cindex_counts,
-    harrell_cindex_counts_bucketed,
 )
 from elastic_surv_spark.metrics.km import km_curve
 
@@ -69,6 +69,30 @@ def np_harrell(t, e, risk):
                 elif risk[i] == risk[j]:
                     tied += 1
     return comp, conc, tied, (conc + 0.5 * tied) / comp
+
+
+def np_antolini(t, e, cuts, surv_matrix):
+    """Antolini td-concordance counts: S_i(t) = surv[i, max {k : cuts[k]
+    <= t}], 1.0 before the first cut; (comparable, concordant, tied)."""
+
+    def s_at(i, tau):
+        idx = np.searchsorted(cuts, tau, side="right") - 1
+        return surv_matrix[i, idx] if idx >= 0 else 1.0
+
+    conc = tied = comp = 0
+    n = len(t)
+    for i in range(n):
+        if e[i] != 1:
+            continue
+        for j in range(n):
+            if t[i] < t[j]:
+                comp += 1
+                si, sj = s_at(i, t[i]), s_at(j, t[i])
+                if si < sj:
+                    conc += 1
+                elif si == sj:
+                    tied += 1
+    return comp, conc, tied
 
 
 def np_ipcw_brier(t, e, cuts, surv_matrix, grid):
@@ -151,10 +175,13 @@ def test_km_window_plan_declares_partitioning(spark):
         assert "[_p" in ln, ln  # partition spec present on every window
 
 
-def test_harrell_bucketed_equals_pairwise(spark):
-    # The bucketed (linear-shuffle) algorithm must produce bit-identical
-    # counts to the pairwise join, including heavy time/risk ties straddling
-    # bucket boundaries; tiny n_buckets maximizes boundary cases.
+def test_harrell_bucketed_equals_pairwise(spark, monkeypatch):
+    # Both routes of harrell_cindex_counts (the pairwise join and, above
+    # the size gate, the bucketed kernel on a constant key) must reproduce
+    # the numpy reference counts exactly, including heavy time/risk ties
+    # straddling bucket boundaries; tiny n_buckets maximizes boundary cases.
+    from elastic_surv_spark.metrics.concordance import harrell_cindex_by_bucketed
+
     for seed in (0, 1, 2):
         rng = np.random.default_rng(seed)
         n = 400
@@ -166,34 +193,44 @@ def test_harrell_bucketed_equals_pairwise(spark):
             }
         )
         df = spark.createDataFrame(pdf)
-        exact = harrell_cindex_counts(df, "t", "e", "risk", mode="pairwise").first()
+        comp, conc, tied, c = np_harrell(
+            pdf["t"].to_numpy(), pdf["e"].to_numpy(), pdf["risk"].to_numpy()
+        )
+        with monkeypatch.context() as m:
+            pairwise = tuple(harrell_cindex_counts(df, "t", "e", "risk").first())
+            m.setattr(concordance, "EXACT_THRESHOLD", 10)
+            routed = tuple(harrell_cindex_counts(df, "t", "e", "risk").first())
+        assert pairwise[:3] == (comp, conc, tied), seed
+        assert abs(pairwise[3] - c) < 5e-7, seed
+        assert routed == pairwise, seed
+        keyed = df.withColumn("k", F.lit(0))
         for nb in (1, 3, 8):
-            fast = harrell_cindex_counts_bucketed(df, "t", "e", "risk", n_buckets=nb).first()
-            assert fast["n_comparable"] == exact["n_comparable"], (seed, nb)
-            assert fast["n_concordant"] == exact["n_concordant"], (seed, nb)
-            assert fast["n_tied"] == exact["n_tied"], (seed, nb)
+            fast = harrell_cindex_by_bucketed(
+                keyed, "k", "t", "e", "risk", n_buckets=nb
+            ).first()
+            assert tuple(fast)[1:] == pairwise, (seed, nb)
 
 
-def test_harrell_bucketed_plan_has_no_row_join(spark):
-    # Above the auto threshold the bucketed path runs: its two Spark plans
-    # must contain no join operator at all (the pairwise form shows up as
-    # BroadcastNestedLoopJoin) — the 100x-scale regression guard.
-    from elastic_surv_spark.metrics.concordance import _bucketed_frames
-
+def test_harrell_bucketed_plan_has_no_row_join(spark, monkeypatch):
+    # Above the size gate the bucketed kernel runs on a constant key: its
+    # Spark plan must contain no join operator at all (the pairwise form
+    # shows up as BroadcastNestedLoopJoin) — the 100x-scale regression guard.
     rng = np.random.default_rng(5)
     pdf = pd.DataFrame(
         {"t": rng.uniform(0, 1, 500), "e": rng.integers(0, 2, 500), "risk": rng.uniform(0, 1, 500)}
     )
     df = spark.createDataFrame(pdf)
-    grid, local, _ = _bucketed_frames(df, "t", "e", "risk", n_buckets=16)
-    for frame in (grid, local):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan and "CartesianProduct" not in plan
     pairwise_plan = (
-        harrell_cindex_counts(df, "t", "e", "risk", mode="pairwise")
+        harrell_cindex_counts(df, "t", "e", "risk")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastNestedLoopJoin" in pairwise_plan  # sanity: gate matters
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 100)
+    plan = (
+        harrell_cindex_counts(df, "t", "e", "risk")
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Join" not in plan and "CartesianProduct" not in plan
 
 
 def test_concordance_td_matches_numpy(spark, surv_pdf):
@@ -208,25 +245,9 @@ def test_concordance_td_matches_numpy(spark, surv_pdf):
     df = spark.createDataFrame(pdf)
     got = concordance_td(df, "t", "e", "surv", cuts)
 
-    # numpy reference (Antolini)
-    t, e = surv_pdf["t"].to_numpy(), surv_pdf["e"].to_numpy()
-
-    def s_at(i, tau):
-        idx = np.searchsorted(cuts, tau, side="right") - 1
-        return surv_matrix[i, idx] if idx >= 0 else 1.0
-
-    conc = tied = comp = 0
-    for i in range(n):
-        if e[i] != 1:
-            continue
-        for j in range(n):
-            if t[i] < t[j]:
-                comp += 1
-                si, sj = s_at(i, t[i]), s_at(j, t[i])
-                if si < sj:
-                    conc += 1
-                elif si == sj:
-                    tied += 1
+    comp, conc, tied = np_antolini(
+        surv_pdf["t"].to_numpy(), surv_pdf["e"].to_numpy(), cuts, surv_matrix
+    )
     want = (conc + 0.5 * tied) / comp
     assert abs(got - want) < 1e-12
 
@@ -896,14 +917,11 @@ def test_concordance_td_by_no_comparable_pairs_group(spark):
     assert got[1].n_comparable > 0 and got[1].c_index is not None
 
 
-def test_concordance_td_exact_matches_pairwise_both_modes(spark, surv_pdf):
+def test_concordance_td_exact_matches_numpy(spark, surv_pdf):
     """concordance_td_exact (per-cut bucketed decomposition — the 100 TB
-    Antolini path) is bit-identical to the O(n²) pairwise form, in both
-    the pairwise and the bucketed Harrell kernels."""
-    from elastic_surv_spark.metrics.concordance import (
-        concordance_td,
-        concordance_td_exact,
-    )
+    Antolini path) reproduces the numpy reference counts exactly and the
+    O(n²) pairwise form to its 6-digit rounding."""
+    from elastic_surv_spark.metrics.concordance import concordance_td_exact
 
     rng = np.random.default_rng(13)
     cuts = np.quantile(surv_pdf["t"], np.linspace(0, 1, 6)).tolist()
@@ -914,14 +932,15 @@ def test_concordance_td_exact_matches_pairwise_both_modes(spark, surv_pdf):
     pdf["surv"] = [row.tolist() for row in surv_matrix]
     df = spark.createDataFrame(pdf)
 
-    want = concordance_td(df, "t", "e", "surv", cuts)  # below sample gate
-    for mode in ("pairwise", "bucketed"):
-        comp, conc, tied, cidx = concordance_td_exact(
-            df, "t", "e", "surv", cuts, mode=mode
-        )
-        assert comp > 0 and tied > 0  # the fixture exercises ties
-        assert cidx == round((conc + 0.5 * tied) / comp, 6)
-        assert abs(cidx - want) < 5e-7, (mode, cidx, want)
+    want = np_antolini(
+        surv_pdf["t"].to_numpy(), surv_pdf["e"].to_numpy(), cuts, surv_matrix
+    )
+    comp, conc, tied, cidx = concordance_td_exact(df, "t", "e", "surv", cuts)
+    assert (comp, conc, tied) == want
+    assert comp > 0 and tied > 0  # the fixture exercises ties
+    assert cidx == round((conc + 0.5 * tied) / comp, 6)
+    pairwise = concordance_td(df, "t", "e", "surv", cuts)  # below the gate
+    assert abs(cidx - pairwise) < 5e-7, (cidx, pairwise)
 
 
 def test_concordance_td_exact_before_first_cut_all_tied(spark):
@@ -985,14 +1004,14 @@ def test_concordance_td_by_drops_null_rows_instead_of_crashing(spark):
     assert (a.n_comparable, a.c_index) == (b.n_comparable, b.c_index)
 
 
-def test_concordance_td_auto_routes_to_exact_above_gate(spark, surv_pdf):
-    """VERDICT r11 stretch #8: above the size gate concordance_td now
-    routes to the EXACT per-cut decomposition instead of sampling — the
-    routed value must equal the pairwise kernel (to the exact kernel's
-    6-digit rounding) at a threshold-boundary case, and mode='sample'
-    keeps the old estimator."""
-    from elastic_surv_spark.metrics.concordance import concordance_td
-
+def test_concordance_td_auto_routes_to_exact_above_gate(
+    spark, surv_pdf, monkeypatch
+):
+    """Above the size gate concordance_td routes to the EXACT per-cut
+    decomposition, called through the module name ``concordance_td_exact``
+    (profilers wrap it there): the routed value equals the numpy
+    reference to the exact kernel's 6-digit rounding, and exactly at the
+    threshold the pairwise kernel still runs."""
     rng = np.random.default_rng(23)
     cuts = np.quantile(surv_pdf["t"], np.linspace(0, 1, 6)).tolist()
     n = len(surv_pdf)
@@ -1001,28 +1020,37 @@ def test_concordance_td_auto_routes_to_exact_above_gate(spark, surv_pdf):
     pdf = surv_pdf.copy()
     pdf["surv"] = [row.tolist() for row in surv_matrix]
     df = spark.createDataFrame(pdf)
-
-    pairwise = concordance_td(df, "t", "e", "surv", cuts, mode="pairwise")
-    # exact_threshold below n forces the auto route onto the exact kernel
-    routed = concordance_td(
-        df, "t", "e", "surv", cuts, exact_threshold=n - 1, mode="auto"
+    comp, conc, tied = np_antolini(
+        surv_pdf["t"].to_numpy(), surv_pdf["e"].to_numpy(), cuts, surv_matrix
     )
-    assert abs(routed - round(pairwise, 6)) <= 5e-7, (routed, pairwise)
-    # boundary: exactly at the threshold the pairwise kernel still runs
-    at_gate = concordance_td(
-        df, "t", "e", "surv", cuts, exact_threshold=n, mode="auto"
-    )
-    assert at_gate == pairwise
-    # the sampling estimator is still reachable and statistically sane
-    sampled = concordance_td(
-        df, "t", "e", "surv", cuts, exact_threshold=n - 20, mode="sample"
-    )
-    assert 0.0 <= sampled <= 1.0
-    with pytest.raises(ValueError, match="unknown mode"):
-        concordance_td(df, "t", "e", "surv", cuts, mode="nope")
+    want = (conc + 0.5 * tied) / comp
+
+    calls = []
+    exact = concordance.concordance_td_exact
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return exact(*args, **kwargs)
+
+    monkeypatch.setattr(concordance, "concordance_td_exact", spy)
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", n)
+    at_gate = concordance_td(df, "t", "e", "surv", cuts)
+    assert not calls and abs(at_gate - want) < 1e-12
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", n - 1)
+    routed = concordance_td(df, "t", "e", "surv", cuts)
+    assert len(calls) == 1
+    assert routed == round(want, 6), (routed, want)
 
 
-def test_harrell_cindex_by_bucketed_equals_grouped_map(spark):
+def test_size_gate_probe_is_bounded(spark, monkeypatch):
+    """The one size gate of the global metrics is a bounded probe: on a
+    10¹² -row range it answers without scanning the frame."""
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 1000)
+    assert concordance._exceeds_threshold(spark.range(10**12)) is True
+    assert concordance._exceeds_threshold(spark.range(1000)) is False
+
+
+def test_harrell_cindex_by_bucketed_equals_grouped_map(spark, monkeypatch):
     """harrell_cindex_by_bucketed removes the group-fits-one-task limit
     (per-(group, bucket) slices + a per-group grid kernel, never a whole
     cohort in one task): integer-identical counts to harrell_cindex_by on
@@ -1069,9 +1097,11 @@ def test_harrell_cindex_by_bucketed_equals_grouped_map(spark):
     }
     assert got == want and len(got) == 4
 
-    # single group ≡ the ungrouped bucketed kernel
+    # single group ≡ the global form's large route (the same kernel on a
+    # constant key)
     one = df.filter("g = 2")
-    row = harrell_cindex_counts(one, "t", "e", "r", mode="bucketed").first()
+    monkeypatch.setattr(concordance, "EXACT_THRESHOLD", 10)
+    row = harrell_cindex_counts(one, "t", "e", "r").first()
     assert got[2] == (
         row.n_comparable, row.n_concordant, row.n_tied, row.c_index
     )
@@ -1144,80 +1174,27 @@ def test_concordance_td_exact_by_returns_distributed_frame(spark, surv_pdf):
     assert out.count() == 2
 
 
-def test_grouped_metric_auto_routes(spark, surv_pdf):
-    """The grouped metrics' auto mode mirrors the ungrouped switches: a
-    largest-cohort probe routes above the threshold to the no-whole-
-    cohort-task kernels, identical counts either way; unknown modes fail
-    fast."""
-    import pandas as pd
-
-    from elastic_surv_spark.metrics.concordance import (
-        concordance_td_by,
-        harrell_cindex_by,
-    )
-
-    rng = np.random.default_rng(37)
-    pdf = surv_pdf.copy()
-    pdf["g"] = (np.arange(len(pdf)) % 2).astype("int32")
-    df = spark.createDataFrame(pdf)
-
-    plain = sorted(
-        tuple(r) for r in harrell_cindex_by(df, "g", "t", "e", "risk").collect()
-    )
-    routed = sorted(
-        tuple(r)
-        for r in harrell_cindex_by(
-            df, "g", "t", "e", "risk", mode="auto", exact_threshold=10
-        ).collect()
-    )
-    assert routed == plain
-    with pytest.raises(ValueError, match="unknown mode"):
-        harrell_cindex_by(df, "g", "t", "e", "risk", mode="nope")
-
-    cuts = np.quantile(pdf["t"], np.linspace(0, 1, 5)).tolist()
-    base = rng.uniform(0.5, 1.0, (len(pdf), len(cuts)))
-    pdf["surv"] = [r.tolist() for r in np.round(np.minimum.accumulate(base, 1), 1)]
-    df2 = spark.createDataFrame(pdf)
-    plain2 = sorted(
-        tuple(r)
-        for r in concordance_td_by(df2, "g", "t", "e", "surv", cuts).collect()
-    )
-    routed2 = sorted(
-        tuple(r)
-        for r in concordance_td_by(
-            df2, "g", "t", "e", "surv", cuts, mode="auto", exact_threshold=10
-        ).collect()
-    )
-    assert routed2 == plain2
-    with pytest.raises(ValueError, match="unknown mode"):
-        concordance_td_by(df2, "g", "t", "e", "surv", cuts, mode="nope")
-
-
-def test_bucketed_kernels_evaluate_source_once(spark, surv_pdf):
-    """The bucketed Harrell kernels feed THREE consumers (two grouped-map
+def test_bucketed_kernels_evaluate_source_once(spark, surv_pdf, monkeypatch):
+    """The bucketed Harrell kernel feeds THREE consumers (two grouped-map
     sweeps + the occupancy grid) plus the quantile pass from one input —
-    un-cached they re-ran the source plan per consumer (the r13 scan sweep
+    un-cached it re-ran the source plan per consumer (the r13 scan sweep
     caught 3-4 evaluations once harrell_cindex_cohorts exposed the grouped
     kernel). With the default cache_input, an accumulator-instrumented
-    source must be evaluated ~once; the per-cut callers pass
+    source must be evaluated ~once, grouped and on the constant key of
+    harrell_cindex_counts' large route (forced here past its size probe,
+    which reads the source on its own); the per-cut callers pass
     cache_input=False against their own persisted base (counts asserted
     identical either way)."""
-    import pandas as pd
-
-    from elastic_surv_spark.metrics.concordance import (
-        harrell_cindex_by_bucketed,
-        harrell_cindex_counts_bucketed,
-    )
+    from elastic_surv_spark.metrics.concordance import harrell_cindex_by_bucketed
 
     pdf = surv_pdf.copy()
     pdf["g"] = (np.arange(len(pdf)) % 2).astype("int32")
     src = spark.createDataFrame(pdf)
     n = len(pdf)
+    monkeypatch.setattr(concordance, "_exceeds_threshold", lambda df: True)
+    key = lambda rows: sorted(tuple(r) for r in rows)
 
-    for fn, args in (
-        (harrell_cindex_by_bucketed, ("g", "t", "e", "risk")),
-        (harrell_cindex_counts_bucketed, ("t", "e", "risk")),
-    ):
+    def counted():
         acc = spark.sparkContext.accumulator(0)
 
         def counting(batches):
@@ -1225,16 +1202,23 @@ def test_bucketed_kernels_evaluate_source_once(spark, surv_pdf):
                 acc.add(len(b))
                 yield b
 
-        counted = src.mapInPandas(counting, schema=src.schema)
-        cached = fn(counted, *args, n_buckets=8).collect()
-        # quantiles + checkpoint fill read the source once; every further
-        # consumer reads the checkpoint. The un-fixed shape evaluated the
-        # source 4x — the bound must sit strictly below that.
-        assert n <= acc.value <= 1.5 * n, (fn.__name__, acc.value)
+        return acc, src.mapInPandas(counting, schema=src.schema)
 
-        plain = fn(src, *args, n_buckets=8, cache_input=False).collect()
-        key = lambda rows: sorted(tuple(r) for r in rows)
-        assert key(cached) == key(plain), fn.__name__
+    acc, df = counted()
+    cached = harrell_cindex_by_bucketed(df, "g", "t", "e", "risk", n_buckets=8).collect()
+    # quantiles + checkpoint fill read the source once; every further
+    # consumer reads the checkpoint. The un-fixed shape evaluated the
+    # source 4x — the bound must sit strictly below that.
+    assert n <= acc.value <= 1.5 * n, acc.value
+    plain = harrell_cindex_by_bucketed(
+        src, "g", "t", "e", "risk", n_buckets=8, cache_input=False
+    ).collect()
+    assert key(cached) == key(plain)
+
+    acc, df = counted()
+    routed = harrell_cindex_counts(df, "t", "e", "risk").collect()
+    assert n <= acc.value <= 1.5 * n, acc.value
+    assert key(routed) == key(harrell_cindex_counts(src, "t", "e", "risk").collect())
 
 
 def test_grouped_brier_evaluates_source_once(spark, surv_pdf):
@@ -1266,36 +1250,6 @@ def test_grouped_brier_evaluates_source_once(spark, surv_pdf):
     ).collect()
     key = lambda rows: sorted(tuple(r) for r in rows)
     assert key(cached) == key(plain)
-
-
-def test_grouped_auto_probe_is_bounded(spark):
-    """The grouped auto gate must not pay a full groupBy().count() pass
-    over a tiny frame (ADVICE r12 #3): a frame whose TOTAL row count fits
-    the bounded limit-probe can't contain an over-threshold cohort, so the
-    grouped aggregate must never run — asserted by making groupBy
-    explode. Above the total bound, the grouped count still decides per
-    cohort: many small cohorts stay on the grouped-map path."""
-    from unittest import mock
-
-    from pyspark.sql import DataFrame
-
-    from elastic_surv_spark.metrics.concordance import _largest_cohort_exceeds
-
-    small = spark.range(50).select(
-        (F.col("id") % 5).alias("g"), F.col("id").alias("v")
-    )
-    with mock.patch.object(
-        DataFrame, "groupBy",
-        side_effect=AssertionError("unbounded probe: grouped count ran"),
-    ):
-        assert _largest_cohort_exceeds(small, "g", 1000) is False
-
-    wide = spark.range(300).select(
-        (F.col("id") % 100).alias("g"), F.col("id").alias("v")
-    )
-    assert _largest_cohort_exceeds(wide, "g", 100) is False  # cohorts of 3
-    skewed = spark.range(300).select(F.lit(0).alias("g"), F.col("id").alias("v"))
-    assert _largest_cohort_exceeds(skewed, "g", 100) is True
 
 
 def test_grouped_exact_kernels_edge_cases(spark):
@@ -1338,3 +1292,46 @@ def test_grouped_exact_kernels_edge_cases(spark):
         for x in harrell_cindex_by_bucketed(small, "g", "t", "e", "r").collect()
     )
     assert g == w
+
+
+def test_metrics_bit_identical_across_partition_counts(spark, surv_pdf, monkeypatch):
+    """Results stay bit-identical at any shuffle partition count: both
+    routes of harrell_cindex_counts, the grouped bucketed kernel,
+    concordance_td_exact and cumulative_dynamic_auc at 1 and 7."""
+    from elastic_surv_spark.metrics.concordance import (
+        concordance_td_exact,
+        harrell_cindex_by_bucketed,
+    )
+    from elastic_surv_spark.metrics.td_auc import cumulative_dynamic_auc
+
+    rng = np.random.default_rng(41)
+    cuts = np.quantile(surv_pdf["t"], np.linspace(0, 1, 6)).tolist()
+    base = rng.uniform(0.5, 1.0, (len(surv_pdf), len(cuts)))
+    pdf = surv_pdf.copy()
+    pdf["surv"] = [r.tolist() for r in np.round(np.minimum.accumulate(base, 1), 1)]
+    pdf["g"] = (np.arange(len(pdf)) % 3).astype("int32")
+    df = spark.createDataFrame(pdf)
+    key = lambda frame: sorted(tuple(r) for r in frame.collect())
+
+    def run():
+        out = {"pairwise": key(harrell_cindex_counts(df, "t", "e", "risk"))}
+        with monkeypatch.context() as m:
+            m.setattr(concordance, "EXACT_THRESHOLD", 10)
+            out["routed"] = key(harrell_cindex_counts(df, "t", "e", "risk"))
+        out["by_bucketed"] = key(
+            harrell_cindex_by_bucketed(df, "g", "t", "e", "risk", n_buckets=8)
+        )
+        out["td_exact"] = concordance_td_exact(df, "t", "e", "surv", cuts)
+        out["td_auc"] = key(cumulative_dynamic_auc(df, "t", "e", "risk"))
+        return out
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        one = run()
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        seven = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert one == seven
+    assert one["routed"] == one["pairwise"]

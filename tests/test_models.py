@@ -108,6 +108,19 @@ def test_model_smoke_5_epochs(dataset, model_cls):
     assert 0.0 <= scores["brier_score"] <= 1.0
 
 
+def test_deephit_predict_lies_in_unit_interval(dataset):
+    # S = 1 - cumsum(pmf) lands a few ulps below 0 at the last cut unless
+    # clamped; every predicted survival value must lie in [0, 1] exactly
+    model = DeepHitModel(in_features=dataset.in_features, epochs=5, seed=42)
+    model.train(dataset)
+    pred = model.predict(
+        dataset.test_df, id_cols=[dataset.time_column], features=dataset.features
+    )
+    surv = np.array([row["surv"] for row in pred.collect()])
+    assert surv.size and surv.min() >= 0.0 and surv.max() <= 1.0
+    assert np.all(np.diff(surv, axis=1) <= 0.0)  # clamping keeps S monotone
+
+
 def test_logistic_hazard_beats_random(dataset):
     model = LogisticHazardModel(
         in_features=dataset.in_features, epochs=40, patience=40, lr=1e-2, seed=42
